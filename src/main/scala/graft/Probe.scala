@@ -18,12 +18,9 @@ import graft.sources.EventFixtures
   *    output-row ratio. A horizon-bounded run shows the production knob
   *    (bounded lookback ⇒ far cutoffs do no work at all).
   *
-  * 2. Skew salting: one synthetic hot customer owning ~20% of the action
-  *    table, with auto-broadcast disabled — at 100 TB the action table
-  *    cannot broadcast, so the join is sort-merge and the hot key pins one
-  *    partition. (With broadcast enabled the probe side spreads hot rows
-  *    evenly and salting is pure overhead — which is why salting must stay
-  *    opt-in.) Pass = targeted (hot-keys-only) salting beats unsalted.
+  * 2. Precomputed vs direct flagship: over repeated runs, building the O3
+  *    history table once and joining it per run beats running the direct
+  *    O4 each time; pass = precompute total < direct total.
   */
 object Probe {
 
@@ -77,51 +74,15 @@ object Probe {
     val timeRatio = t10 / t1
     println(f"""{"probe":"o3_dt_scaling","dts_1x":$n1,"dts_10x":$n10,"rows_1x":$rows1,"rows_10x":$rows10,"sec_1x":$t1%.3f,"sec_10x":$t10%.3f,"sec_10x_horizon45":$tH%.3f,"time_ratio":$timeRatio%.2f,"row_ratio":$rowRatio%.2f,"pass":${timeRatio <= 1.5 * rowRatio}}""")
 
-    // --- Probe 2: salted vs unsalted join under one hot customer --------
-    // Reassign ~20% of all actions to customer 1 and run the flagship
-    // pipeline with auto-broadcast off (the 100 TB regime: a fact×fact
-    // sort-merge join where the hot key lands in one partition).
-    val skewed = actions
-      .withColumn("customer_id", when(pmod(col("item_id"), lit(5)) === 0, lit(1L)).otherwise(col("customer_id")))
-      .persist()
-    skewed.count()
-    val imps = EventFixtures.impressions(spark, sfDir)
-      .withColumn("customer_id", when(pmod(col("ranking_id").cast("long"), lit(4)) === 0, lit(1L)).otherwise(col("customer_id")))
-      .persist()
-    imps.count()
-    // Force the SMJ regime and mask AQE's own skew mitigation — the
-    // mechanism under test is the explicit salt. Partition coalescing is
-    // also off: it sizes by INPUT shuffle bytes (a few MB here) and would
-    // merge the salted sub-keys back into one task, blind to the join's
-    // multi-million-row OUTPUT — at real scale inputs are big enough that
-    // it never triggers.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-
-    val hot = TrainingPipeline.detectHotCustomers(skewed, threshold = 5000L)
-
-    def flagship(salt: Option[Int], hotOnly: Option[Seq[Long]]): Unit = drain(
-      TrainingPipeline.produceTrainingExamplesFromActions(
-        imps, skewed, 8, saltBuckets = salt, saltOnlyCustomers = hotOnly))
-    flagship(None, None) // warm-up
-    val tPlain = (1 to 2).map(_ => time(flagship(None, None))).min
-    val tSaltAll = (1 to 2).map(_ => time(flagship(Some(8), None))).min
-    val tSaltHot = (1 to 2).map(_ => time(flagship(Some(8), Some(hot)))).min
-    println(f"""{"probe":"salted_skew_join","hot_customers":${hot.length},"sec_plain":$tPlain%.3f,"sec_salt_all":$tSaltAll%.3f,"sec_salt_hot":$tSaltHot%.3f,"speedup_hot":${tPlain / tSaltHot}%.2f,"pass":${tSaltHot < tPlain}}""")
-
-    // --- Probe 3: precomputed O3 histories vs the direct flagship -------
+    // --- Probe 2: precomputed O3 histories vs the direct flagship -------
     // The reference README's production claim (README.md:69-72): when
     // training runs recur over the same days, materialize the
     // per-(customer, dt) history table once and join each run against it,
-    // instead of re-ranking raw actions per run. Modeled as `runs`
+    // instead of re-chunking raw actions per run. Modeled as `runs`
     // repeated flagship executions: the direct path pays the
-    // actions-join + window every time; the precompute path pays O3 once
+    // chunk build + merge every time; the precompute path pays O3 once
     // (persisted, standing in for the production parquet table) and then
     // only the cheap (customer, dt) equi-join per run.
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.unset("spark.sql.adaptive.skewJoin.enabled")
-    spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
     val impsReal = EventFixtures.impressions(spark, sfDir).persist()
     impsReal.count()
     val runs = 5

@@ -959,7 +959,7 @@ object ScaleProbe {
     // padded-array shuffle that implies. This row measures it on sf0.1:
     // wall-clock AND the exchanges' shuffle-bytes-written (the concern
     // is bytes, not time — padding is materialized by collect_list +
-    // pad, and the window/agg exchanges carry the full arrays).
+    // pad, and the chunk and merge exchanges carry the full arrays).
     if (only.forall(_.contains("q03_maxhist1000"))) {
       def flagshipAt(maxHist: Int): (SparkSession, String) => DataFrame = (s, d) =>
         graft.operators.TrainingPipeline.produceTrainingExamples(

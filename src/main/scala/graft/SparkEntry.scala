@@ -4449,7 +4449,7 @@ object SparkEntry {
          |),
          |ranked AS (
          |  SELECT *, ROW_NUMBER() OVER (
-         |      PARTITION BY dt, ranking_id, customer_id, impression_pos, impression_item_id
+         |      PARTITION BY dt, ranking_id, customer_id, impression_pos, impression_item_id, label
          |      ORDER BY action_time DESC, item_id, action_type) AS rn
          |  FROM joined
          |),
@@ -6388,7 +6388,7 @@ object SparkEntry {
          |),
          |ranked AS (
          |  SELECT *, ROW_NUMBER() OVER (
-         |      PARTITION BY dt, ranking_id, customer_id, impression_pos, impression_item_id
+         |      PARTITION BY dt, ranking_id, customer_id, impression_pos, impression_item_id, label
          |      ORDER BY action_time DESC, item_id, action_type) AS rn
          |  FROM joined
          |),
@@ -11677,7 +11677,7 @@ object SparkEntry {
        |),
        |ranked AS (
        |  SELECT *, ROW_NUMBER() OVER (
-       |      PARTITION BY dt, ranking_id, customer_id, impression_pos, impression_item_id
+       |      PARTITION BY dt, ranking_id, customer_id, impression_pos, impression_item_id, label
        |      ORDER BY action_time DESC, item_id, action_type) AS rn
        |  FROM joined
        |),

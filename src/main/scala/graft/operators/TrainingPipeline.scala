@@ -16,21 +16,25 @@ import org.apache.spark.sql.types._
   *     history-less customers despite the documented all-zero-padding
   *     semantics at README.md:21-22 / tests:110-113). Here the documented
   *     semantics hold: no-history impressions survive with all-zero arrays.
-  *  2. Windows carry total orderings (`action_time DESC, item_id,
+  *  2. Histories carry a total ordering (`action_time DESC, item_id,
   *     action_type` — reference orders by `action_time` alone,
   *     pipeline.py:169, which is non-deterministic on timestamp ties).
   *  3. Grouping uses the real key columns including `impression_item_id`
-  *     (the reference's string surrogate key at pipeline.py:164-167 omits it
-  *     and can interleave rank sequences of duplicate carousel rows).
+  *     and `label` (the reference's string surrogate key at
+  *     pipeline.py:164-167 omits the item and can interleave rank sequences
+  *     of duplicate carousel rows); two rows that differ only in `is_order`
+  *     each get the full top-K.
   *
-  * Scale design: the single wide shuffle is the impressions×actions join on
-  * `customer_id`; the subsequent window + aggregation share one
-  * hash-partitioning on the impression key, so Catalyst plans exactly two
-  * exchanges. `repartitionNum` optionally pins the join parallelism
-  * (reference hard-codes 200 at pipeline.py:153-156); default leaves AQE in
-  * charge. For repeated daily runs prefer [[customerHistoryBeforeDt]]
-  * (the reference's recommended-but-unimplemented precompute,
-  * pipeline.py:99-115, README.md:69-72).
+  * Scale design: raw actions never meet impressions. They are first cut to
+  * per-(customer, day) top-K chunks ([[dailyTopKChunks]], bounded map-side
+  * by WindowGroupLimit); each impression row then joins at most K+1
+  * qualifying chunks and merges them ([[mergeChunkHistories]]) — the same
+  * merge the streaming twin runs. A hot customer therefore costs K+1
+  * chunks per impression row, not its whole history, so no salting or
+  * partition pinning is needed; AQE sizes the exchanges. For repeated
+  * daily runs prefer [[customerHistoryBeforeDt]] (the reference's
+  * recommended-but-unimplemented precompute, pipeline.py:99-115,
+  * README.md:69-72).
   */
 object TrainingPipeline {
 
@@ -89,7 +93,7 @@ object TrainingPipeline {
         when(col("imp.is_order") === true, 1).otherwise(0).cast(IntegerType).as("label"))
 
   /** Fixed-length most-recent-first array assembly shared by O3/O4:
-    * `hist` is a sorted array of struct(rn, item_id, action_type); emit the
+    * `hist` is a sorted array of struct(neg_us, item_id, action_type); emit the
     * two parallel arrays truncated/zero-padded to exactly `maxHistory`.
     * Pure array expressions — stays inside whole-stage codegen.
     */
@@ -208,23 +212,9 @@ object TrainingPipeline {
       clicks: DataFrame,
       addToCarts: DataFrame,
       orders: DataFrame,
-      maxHistory: Int = DefaultMaxHistory,
-      repartitionNum: Option[Int] = None,
-      saltBuckets: Option[Int] = None,
-      persistActions: Boolean = false): DataFrame = {
-    val actions0 = normalizeActions(clicks, addToCarts, orders)
-    // README.md:64 advice (persist all_actions across multi-day runs) as a
-    // real flag. NOTE: the cached frame is method-local, so repeated
-    // persistActions=true invocations each cache a fresh copy — for daily
-    // reruns prefer persisting normalizeActions' output yourself and
-    // calling [[produceTrainingExamplesFromActions]].
-    val actions =
-      if (persistActions)
-        actions0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else actions0
+      maxHistory: Int = DefaultMaxHistory): DataFrame =
     produceTrainingExamplesFromActions(
-      impressions, actions, maxHistory, repartitionNum, saltBuckets)
-  }
+      impressions, normalizeActions(clicks, addToCarts, orders), maxHistory)
 
   /** O4 from a pre-normalized (and possibly caller-persisted) actions
     * table — the entry point for repeated daily runs where `all_actions`
@@ -233,99 +223,47 @@ object TrainingPipeline {
   def produceTrainingExamplesFromActions(
       impressions: DataFrame,
       actions: DataFrame,
-      maxHistory: Int = DefaultMaxHistory,
-      repartitionNum: Option[Int] = None,
-      saltBuckets: Option[Int] = None,
-      saltOnlyCustomers: Option[Seq[Long]] = None): DataFrame = {
-    val ex = explodeImpressions(impressions)
-      .withColumn("cutoff_ts", to_timestamp(concat(col("dt"), lit(" 00:00:00"))))
+      maxHistory: Int = DefaultMaxHistory): DataFrame =
+    mergeChunkHistories(
+      explodeWithCutoffs(impressions), dailyTopKChunks(actions, maxHistory), maxHistory)
 
-    // Optional explicit co-location on the join key (reference hard-codes
-    // repartition(200) at pipeline.py:153-156); by default the join's own
-    // hash exchange + AQE handle sizing.
-    val (exP0, actP0) = repartitionNum match {
-      case Some(n) => (
-        ex.repartition(n, col("customer_id")),
-        actions.repartition(n, col("customer_id")))
-      case None => (ex, actions)
-    }
+  /** O2 plus each impression row's event-time cutoff: `cutoff_ts` (dt
+    * 00:00:00, the streaming watermark column) and `cutoff_day`.
+    */
+  private[graft] def explodeWithCutoffs(impressions: DataFrame): DataFrame =
+    explodeImpressions(impressions)
+      .withColumn("cutoff_ts", to_timestamp(col("dt")))
+      .withColumn("cutoff_day", to_date(col("dt")))
 
-    // Hot-customer skew salting (README.md:70's "split hot customers" as a
-    // real mechanism): actions spread deterministically over N sub-keys,
-    // impressions replicated over all N, join key becomes (customer, salt).
-    // Null-extension still works per (impression, salt) row; empty-bucket
-    // nulls are dropped by the conditional collect below.
-    //
-    // `saltOnlyCustomers` narrows the mechanism to a known hot-key set
-    // (from [[detectHotCustomers]] or ops knowledge): everyone else keeps
-    // salt 0 and is NOT replicated, so the ×N replication cost is paid only
-    // where the skew is — the form that survives 100 TB, where replicating
-    // every impression N× would N× the dominant shuffle.
-    val (exP, actP, joinKeyExtra) = saltBuckets match {
-      case Some(n) =>
-        val allSalts = sequence(lit(0), lit(n - 1))
-        val actSalt = pmod(hash(col("item_id"), col("action_time")), lit(n))
-        val (exSalts, actSaltCol) = saltOnlyCustomers match {
-          case Some(hot) =>
-            val isHot = col("customer_id").isInCollection(hot)
-            (when(isHot, allSalts).otherwise(array(lit(0))),
-              when(isHot, actSalt).otherwise(lit(0)))
-          case None => (allSalts, actSalt)
-        }
-        (
-          exP0.withColumn("_salt", explode(exSalts)),
-          actP0.withColumn("_salt", actSaltCol),
-          Some(col("ex._salt") === col("act._salt")))
-      case None => (exP0, actP0, None)
-    }
-
-    // Anti-leakage predicate in the ON clause (fix #1): null-extended rows
-    // for history-less customers survive the left join.
-    val baseCond = col("ex.customer_id") === col("act.customer_id") &&
-      col("act.action_time") < col("ex.cutoff_ts")
-    val joined = exP.alias("ex")
+  /** O4's one history merge, shared by the batch entry points and the
+    * streaming twin: every exploded impression row left-joins its
+    * customer's [[dailyTopKChunks]] that [[chunkQualifies]] for its cutoff
+    * day (anti-leakage in the ON clause, fix #1, so history-less rows
+    * survive with an empty `hist`), then the ≤ K+1 chunks per row are
+    * flattened, sorted by the chunk struct's total order (fix #2) and cut
+    * to K. The group key is the full impression key plus `label` (fix #3)
+    * and `cutoff_ts`, the column a streaming caller's watermark expires
+    * aggregation state on.
+    */
+  private[graft] def mergeChunkHistories(
+      exploded: DataFrame,
+      chunks: DataFrame,
+      maxHistory: Int): DataFrame = {
+    val key = Seq(
+      col("dt"), col("ranking_id"), col("customer_id"),
+      col("impression_pos"), col("impression_item_id"), col("label"))
+    val qualifying = chunks.select(
+      col("customer_id").as("act_customer_id"),
+      col("action_day"), col("expiry_day"), col("chunk"))
+    exploded
       .join(
-        actP.alias("act"),
-        joinKeyExtra.map(baseCond && _).getOrElse(baseCond),
+        qualifying,
+        col("customer_id") === col("act_customer_id") &&
+          chunkQualifies(col("action_day"), col("cutoff_day"), col("expiry_day")),
         "left_outer")
-      .select(
-        col("ex.dt").as("dt"),
-        col("ex.ranking_id").as("ranking_id"),
-        col("ex.customer_id").as("customer_id"),
-        col("ex.impression_pos").as("impression_pos"),
-        col("ex.impression_item_id").as("impression_item_id"),
-        col("ex.label").as("label"),
-        col("act.item_id").as("item_id"),
-        col("act.action_type").as("action_type"),
-        col("act.action_time").as("action_time"))
-
-    // Real multi-column impression key (fix #3) + total ordering (fix #2).
-    val w = Window
-      .partitionBy(
-        col("dt"), col("ranking_id"), col("customer_id"),
-        col("impression_pos"), col("impression_item_id"))
-      .orderBy(col("action_time").desc, col("item_id"), col("action_type"))
-
-    val ranked = joined
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= maxHistory)
-
-    // Conditional collect: the null action row of a history-less impression
-    // contributes nothing (collect_list drops nulls) → clean empty array.
-    val agg = ranked
-      .groupBy(
-        col("dt"), col("ranking_id"), col("customer_id"),
-        col("impression_pos"), col("impression_item_id"), col("label"))
-      .agg(sort_array(collect_list(when(
-        col("action_time").isNotNull,
-        struct(col("rn"), col("item_id"), col("action_type")))))
-        .as("hist"))
-
-    agg.select(
-      Seq(
-        col("dt"), col("ranking_id"), col("customer_id"),
-        col("impression_pos"), col("impression_item_id"), col("label")) ++
-        paddedArrays(maxHistory): _*)
+      .groupBy(key :+ col("cutoff_ts"): _*)
+      .agg(slice(array_sort(flatten(collect_list(col("chunk")))), 1, maxHistory).as("hist"))
+      .select(key ++ paddedArrays(maxHistory): _*)
   }
 
   /** Deterministic hash-based negative sampling — the ranking-training
@@ -387,18 +325,6 @@ object TrainingPipeline {
         col("dt"), col("ranking_id"), col("customer_id"),
         col("cand").as("item_id"), lit(0).as("label"), col("rn"))
   }
-
-  /** Hot-key detection for targeted salting: customers whose action count
-    * exceeds `threshold`. One partial-aggregated count per customer; the
-    * collect is metadata-sized (hot keys are few by definition — `cap`
-    * guards a mis-set threshold from flooding the driver).
-    */
-  def detectHotCustomers(actions: DataFrame, threshold: Long, cap: Int = 1000): Seq[Long] =
-    actions.groupBy(col("customer_id")).count()
-      .filter(col("count") > threshold)
-      .orderBy(col("count").desc)
-      .limit(cap)
-      .select("customer_id").collect().map(_.getLong(0)).toSeq
 
   /** Typed variant of O4: same plan, surfaced as `Dataset[TrainingExample]`
     * (SURVEY §1.4's typed entry point).

@@ -60,23 +60,13 @@ object StreamingOps {
     * production shape the reference's README gestures at ("raw Kafka-level
     * data") — a daily-refresh action table joined by an always-on stream.
     *
-    * Window functions are unsupported on streams, so ranking reuses the
-    * history precompute's collect→sort→slice merge (`neg_us` struct order
-    * = the pipeline's total order); results match the batch
-    * `produceTrainingExamples` exactly (pinned by spec). Aggregation state
-    * is keyed by the impression key including the event-time `cutoff_ts`
-    * and expires `watermarkDelay` behind the newest impression day — state
-    * is bounded by (carousels per watermark horizon), not by stream
-    * lifetime.
-    *
-    * Per-group state is ALSO bounded: the static side is not raw actions
-    * but O3-stage-1 per-(customer, day) top-K chunks
-    * ([[graft.operators.TrainingPipeline.dailyTopKChunks]]), and the join
-    * carries the chunk-expiry predicate, so each impression group
-    * aggregates ≤ maxHistory+1 chunk arrays no matter how many actions a
-    * hot customer has — the same bound the batch precompute enforces. (A
-    * raw-action join would collect a hot customer's ENTIRE pre-cutoff
-    * history into the state store before slicing.)
+    * It is the batch O4 plan plus a watermark on `cutoff_ts`: the same
+    * window-free chunk merge
+    * ([[graft.operators.TrainingPipeline.mergeChunkHistories]]), so results
+    * match the batch pipeline exactly (pinned by spec). Aggregation state
+    * is keyed by the impression key including `cutoff_ts` and expires
+    * `watermarkDelay` behind the newest impression day; each group holds
+    * ≤ maxHistory+1 chunk arrays however hot the customer is.
     *
     * The chunk table is a deterministic function of `actions`; for an
     * actions table refreshed daily, compute it once per refresh and pass
@@ -90,32 +80,10 @@ object StreamingOps {
       watermarkDelay: String = "2 days",
       precomputedChunks: Option[DataFrame] = None): DataFrame = {
     import graft.operators.TrainingPipeline
-    val ex = TrainingPipeline.explodeImpressions(impressions)
-      .withColumn("cutoff_ts", to_timestamp(col("dt")))
-      .withColumn("cutoff_day", to_date(col("dt")))
-      .withWatermark("cutoff_ts", watermarkDelay)
-    val chunks = precomputedChunks
-      .getOrElse(TrainingPipeline.dailyTopKChunks(actions, maxHistory))
-      .select(
-        col("customer_id").as("act_customer_id"),
-        col("action_day"), col("expiry_day"), col("chunk"))
-    val joined = ex.join(
-      chunks,
-      col("customer_id") === col("act_customer_id") &&
-        TrainingPipeline.chunkQualifies(col("action_day"), col("cutoff_day"), col("expiry_day")),
-      "left_outer")
-    val agg = joined
-      .groupBy(
-        col("cutoff_ts"), col("dt"), col("ranking_id"), col("customer_id"),
-        col("impression_pos"), col("impression_item_id"), col("label"))
-      .agg(slice(
-        array_sort(flatten(collect_list(when(col("chunk").isNotNull, col("chunk"))))),
-        1, maxHistory).as("hist"))
-    agg.select(
-      Seq(
-        col("dt"), col("ranking_id"), col("customer_id"),
-        col("impression_pos"), col("impression_item_id"), col("label")) ++
-        TrainingPipeline.paddedArrays(maxHistory): _*)
+    TrainingPipeline.mergeChunkHistories(
+      TrainingPipeline.explodeWithCutoffs(impressions).withWatermark("cutoff_ts", watermarkDelay),
+      precomputedChunks.getOrElse(TrainingPipeline.dailyTopKChunks(actions, maxHistory)),
+      maxHistory)
   }
 
   /** Stream-stream time-bounded join (streaming attribution): every

@@ -48,10 +48,13 @@ class PlanShapeSpec extends SparkSpec {
       EventFixtures.orders(spark, dir),
       maxHistory = 8)
     val p = plan(df)
-    // One exchange pair for the customer join (both sides) + one for the
-    // impression-key window/agg; the window and its aggregate share
-    // partitioning, so 4 is the ceiling.
+    // Raw actions are cut to per-(customer, day) top-K chunks before they
+    // meet impressions: one exchange for the (customer, day) window + agg,
+    // one for the lead() expiry window by customer, one for the impression
+    // side of the customer join, one for the impression-key merge — 4 is
+    // the ceiling.
     assert(shuffles(df) <= 4, s"flagship pipeline grew a shuffle:\n$p")
+    assert(p.contains("WindowGroupLimit"), "raw actions no longer bounded before the impression join")
     assert(p.contains("PushedFilters: [IsNotNull"), "scan pushdown lost")
   }
 

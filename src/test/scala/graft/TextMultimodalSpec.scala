@@ -1605,6 +1605,22 @@ class TextMultimodalSpec extends SparkSpec {
     assert(out.toSeq === Seq((0L, 2L, 4L, 3L, 3L), (1L, 2L, 9L, 2L, 5L)))
   }
 
+  test("vocabularyGrowth: prefix-count and single-window paths agree, empty corpus included") {
+    // A scan with at least as many partitions as cores takes the
+    // distributed prefix-count rank; one partition takes the single window.
+    val cores = spark.sparkContext.defaultParallelism
+    def curve(d: org.apache.spark.sql.DataFrame) =
+      TextAnalysis.vocabularyGrowth(d, buckets = 2).orderBy("bucket").collect().toSeq
+    val small = Seq((1L, "a b"), (2L, "b c"), (3L, "c d"), (4L, "a d e"), (5L, "f"))
+    for (rows <- Seq(Seq.empty[(Long, String)], small)) {
+      val d = rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+      val single = curve(d.coalesce(1))
+      assert(curve(d.repartition(cores)) === single)
+      assert(single.length === (if (rows.isEmpty) 0 else 2))
+    }
+  }
+
   test("tokenizerScorecard: totals, distinct pieces used, exact chars-per-piece ppm") {
     // 3 word occurrences, 8 chars, 5 pieces over 3 distinct pieces:
     // cpp = 8/5 -> 1600000 ppm exactly.

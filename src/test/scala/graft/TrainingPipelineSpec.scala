@@ -148,15 +148,24 @@ class TrainingPipelineSpec extends SparkSpec {
     }
   }
 
-  test("salted skew join produces identical results to the plain join") {
-    val (impressions, clicks, carts, orders) = basicFixture
-    val plain = TrainingPipeline
-      .produceTrainingExamples(impressions, clicks, carts, orders, maxHistory = 5)
-    val salted = TrainingPipeline
-      .produceTrainingExamples(impressions, clicks, carts, orders, maxHistory = 5,
-        saltBuckets = Some(4))
-    assert(plain.exceptAll(salted).count() === 0)
-    assert(salted.exceptAll(plain).count() === 0)
+  test("duplicate carousel rows differing only in is_order each get the full top-K") {
+    // Two rows share (dt, ranking_id, customer_id, pos, item) and differ in
+    // label; the customer has 6 prior actions, more than K/2 = 2. Ranking
+    // without `label` in the key would split the top-4 across the rows.
+    val impressions = Seq(
+      Impression("2025-08-14", "rd", 4L, Seq(ImpressionItem(100L, is_order = false))),
+      Impression("2025-08-14", "rd", 4L, Seq(ImpressionItem(100L, is_order = true)))).toDF()
+    val clicks = (1 to 6).map(d =>
+      Click(f"2025-08-0$d", 4L, 40L + d, ts(f"2025-08-0$d 10:00:00"))).toDF()
+    val out = TrainingPipeline
+      .produceTrainingExamples(impressions, clicks,
+        Seq.empty[CartAdd].toDF(), Seq.empty[OrderEvent].toDF(), maxHistory = 4)
+      .collect()
+    assert(out.map(_.getAs[Int]("label")).sorted.toSeq === Seq(0, 1))
+    out.foreach { r =>
+      assert(r.getAs[Seq[Long]]("actions") === Seq(46L, 45L, 44L, 43L))
+      assert(r.getAs[Seq[Int]]("action_types") === Seq(1, 1, 1, 1))
+    }
   }
 
   test("typed API returns Dataset[TrainingExample] with intact semantics") {
